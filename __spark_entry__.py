@@ -37,43 +37,24 @@ def entry(spark: SparkSession) -> DataFrame:
 # this list limited to keys whose code or oracle actually changed in
 # the round's diff (round-5 verdict item 3).
 CHANGED_THIS_ROUND: list[str] = [
-    # --- r14 optimization-touched keys (results pinned identical) ---
-    "cur_contamination_pos_spans",  # shared flagged-docs frame (keep_docs)
-    "cur_contamination_cut",     # fdocs reuse + NOT-IN pass-through
-    "sim_kmeans_clusters",       # partial-sum centroid recompute
-    "sim_pq_ann",                # fused encode+ADC single Arrow pass
-    "sim_ivfpq_ann",             # fused cell-assign+encode+ADC pass
-    "dedup_minhash_lsh",         # shuffle-free HOF minhash signatures
-    "dedup_clusters",            # (minhash signature chain)
-    "dedup_incremental",         # (minhash signature chain + sigstore)
-    "dedup_cascade",             # (minhash signature chain)
-    "cur_end_to_end",            # (minhash signature chain)
-    "cur_survivorship",          # (minhash signature chain)
-    "mm_cross_modal_audit",      # (minhash signature chain)
-    "text_bpe_vocab",            # k·n_words driver gate + Java-dot padding
-    "text_bpe_encode",           # (bpe_vocab gate)
-    "text_bpe_fertility",        # (bpe_vocab gate)
-    "cur_bpe_pack",              # (bpe_vocab gate)
-    "cur_epoch_plan_fertility",  # (bpe_vocab gate)
-    "graph_adamic_adar",         # numpy wedge kernel (driver tier)
-    "graph_link_prediction",     # numpy wedge kernel (driver tier)
-    "text_rake_keywords",        # one doc_id shuffle up front (8→3 exch)
-    # --- r13-touched keys the r13 driver window never re-checked
-    #     (round-13 verdict item 3: stale CHANGED_THIS_ROUND) ---
-    "sim_label_knn_audit",
-    "cur_semantic_decontaminate",
-    "sim_ivf_ann",
-    "sim_ivf_ann_nprobe",
-    "graph_triangle_count",
-    "graph_pagerank",
-    "sim_hard_negatives",
-    "sim_prototype_prune",
-    "sim_lsh_ann",
-    "sim_embedding_near_dup",
-    "sim_embedding_near_dup_lsh",
-    "mm_audio_ann",
-    "sim_cosine_topk",
-    "text_bigram_rarity",
+    # --- driver tiers moved onto collect.bounded_collect ---
+    "graph_triangle_count",      # _collect_canonical → bounded collect
+    "graph_clustering_coeff",    # (same)
+    "graph_pagerank",            # edge + node-list bounded collects
+    "graph_kcore",               # bounded collect, shared _adjacency
+    "graph_adamic_adar",         # one numpy wedge kernel, any id type
+    "graph_link_prediction",     # (same kernel: neighbor_jaccard)
+    "graph_degree_assortativity",  # (graph module; no driver tier)
+    "dedup_clusters",            # cluster_documents → connected_components
+    "cur_survivorship",          # (cluster_documents)
+    "j_entity_resolution",       # (cluster_documents)
+    "sim_semantic_dedup",        # (cluster_documents)
+    "text_bpe_vocab",            # bpe_vocab word table bounded collect
+    "text_bpe_encode",           # (bpe_vocab)
+    "text_bpe_fertility",        # (bpe_vocab)
+    "cur_bpe_pack",              # (bpe_vocab)
+    "cur_epoch_plan_fertility",  # (bpe_vocab)
+    "text_source_divergence_declared",  # (textops module)
 ]
 
 

@@ -7,16 +7,22 @@ and C in one group even if they never matched directly). Component id
 = the minimum doc id reachable, so the canonical representative of a
 cluster is its smallest id — deterministic in any engine.
 
-Algorithm, two tiers:
-- small graphs (edge list under ``SMALL_EDGE_LIMIT``): driver-side
-  union-find — near-dup edge lists are the reduced OUTPUT of a dedup
-  pass, usually tiny next to the corpus;
-- large graphs: alternating large-star / small-star rounds (Kiveris
-  et al., "Connected Components in MapReduce and Beyond") — O(log² n)
-  rounds on ANY graph, where plain min-label propagation needs
-  diameter-many rounds (a 100-hop chain of near-dups would stall it).
-``localCheckpoint`` truncates the lineage each round so the plan
-doesn't grow with the iteration count (the classic
+Every operator here that has a driver tier reaches it the same way:
+the edge frame goes through ``collect.bounded_collect`` with the
+operator's edge budget (``SMALL_EDGE_LIMIT``). If the edges fit they
+arrive as one Arrow table and the driver kernel runs on it (union-find,
+triangle sets, the numpy wedge kernel, the k-core peel, PageRank
+rounds); if not, the distributed tier runs on the same frame that was
+handed to the seam. Near-dup edge lists are the reduced OUTPUT of a
+dedup pass, usually tiny next to the corpus, so the driver tier is the
+common case.
+
+Connected components above the budget: alternating large-star /
+small-star rounds (Kiveris et al., "Connected Components in MapReduce
+and Beyond") — O(log² n) rounds on ANY graph, where plain min-label
+propagation needs diameter-many rounds (a 100-hop chain of near-dups
+would stall it). ``localCheckpoint`` truncates the lineage each round
+so the plan doesn't grow with the iteration count (the classic
 iterative-algorithm trap on Spark).
 
 This is deliberately a driver-side loop over declarative steps — the
@@ -28,6 +34,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from dht11_data_pipeline_spark.operators.collect import bounded_collect
 
 # Hub-center cap for wedge enumeration (neighbor_jaccard): centers with
 # degree above this are excluded from common-neighbor counting — the
@@ -74,7 +82,7 @@ def _union_find_components(edge_rows: list[tuple], spark,
 # near-dup edge lists are the REDUCED output of a dedup pass — usually
 # tiny next to the corpus. Below this count union-find on the driver
 # beats log²-many Spark job rounds. Budget honestly for the ARROW
-# collect path (toPandas of two primitive columns): 1M int64 pairs are
+# collect path (two primitive columns): 1M int64 pairs are
 # 16 MB over the wire; the tuple list + parent/min dicts peak at a few
 # hundred MB of Python heap — safe under the 8 GB driver (the old
 # Row-object collect measured ~10× that, which is why the previous
@@ -91,24 +99,23 @@ def connected_components(pairs: DataFrame, a_col: str = "doc_a",
     cluster_id = min node id in the component. Only nodes that appear
     in at least one edge are returned (callers union in singletons).
 
-    Hybrid execution: if the count of DISTINCT RAW PAIRS (undirected —
-    not the doubled symmetrized edge set, which is what the driver
-    would actually collect anyway) is under ``small_edge_limit`` the
-    closure runs as driver-side union-find over one Arrow collect (the
+    Hybrid execution: if the DISTINCT RAW PAIRS (undirected — not the
+    doubled symmetrized edge set) fit ``small_edge_limit`` the closure
+    runs as driver-side union-find over their bounded collect (the
     same O(small) driver contract as kmeans centroids / PQ codebooks);
-    otherwise the large-star/small-star rounds run fully distributed."""
+    otherwise the large-star/small-star rounds run fully distributed.
+    The raw projection keeps self-loop pairs, so a node whose only
+    pair is (n, n) still gets its own component."""
     # the deduped pair projection feeds either the collect or both
     # symmetrize branches — persist or the (possibly expensive: LSH
     # bucket joins) pair computation runs twice
     und = pairs.select(a_col, b_col).distinct().persist()
-    n_pairs = und.count()
-    if n_pairs <= small_edge_limit:
-        node_type = und.schema[a_col].dataType
-        spark = und.sparkSession
-        pdf = und.toPandas()  # Arrow: two primitive columns, no Rows
+    tbl = bounded_collect(und, small_edge_limit)
+    if tbl is not None:
         und.unpersist()
-        rows = list(zip(pdf[a_col].tolist(), pdf[b_col].tolist()))
-        return _union_find_components(rows, spark, node_type)
+        return _union_find_components(_edge_rows(tbl, a_col, b_col),
+                                      und.sparkSession,
+                                      und.schema[a_col].dataType)
     fwd = und.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
     rev = und.select(F.col(b_col).alias("src"), F.col(a_col).alias("dst"))
     edges = fwd.union(rev).distinct()
@@ -227,22 +234,19 @@ def update_components(labels: DataFrame, new_pairs: DataFrame,
 
 
 def _collect_canonical(pairs: DataFrame, a_col: str, b_col: str,
-                       assume_canonical: bool,
-                       small_edge_limit: int):
-    """Shared small-graph gate: canonicalize + persist + count the pair
-    list; if it fits the driver budget, Arrow-collect it and return
-    (edge_rows, node_type, spark) — else return (None, persisted_und).
-    Every graph operator's driver tier starts here, so the collect
-    contract (two primitive columns, 16 MB/1M edges) is in one place."""
+                       assume_canonical: bool, small_edge_limit: int):
+    """Shared small-graph gate: the PERSISTED canonical (x, y) edge
+    frame, plus its bounded collect — an Arrow table when it has at
+    most ``small_edge_limit`` edges, else None. The distributed tiers
+    read the persisted frame (it feeds several branches); every caller
+    unpersists it on every path."""
     und = _canonical_edges(pairs, a_col, b_col, assume_canonical).persist()
-    n_pairs = und.count()
-    if n_pairs > small_edge_limit:
-        return None, und
-    node_type = und.schema["x"].dataType
-    spark = und.sparkSession
-    pdf = und.toPandas()  # Arrow: two primitive columns, no Rows
-    und.unpersist()
-    return list(zip(pdf["x"].tolist(), pdf["y"].tolist())), (node_type, spark)
+    return und, bounded_collect(und, small_edge_limit)
+
+
+def _edge_rows(tbl, a: str = "x", b: str = "y") -> list[tuple]:
+    """A collected edge table as (a, b) tuples of Python values."""
+    return list(zip(tbl.column(a).to_pylist(), tbl.column(b).to_pylist()))
 
 
 def _adjacency(edge_rows: list[tuple]) -> dict:
@@ -270,11 +274,11 @@ def _triangle_counter(edge_rows: list[tuple], adj: dict) -> dict:
     return tri
 
 
-# wedge-budget for the driver-side pair-similarity tiers: Σ deg² of a
+# wedge-budget for the driver-side pair-similarity tier: Σ deg² of a
 # collected graph can be huge even under the EDGE limit (a few massive
-# hubs), and the Python loops below walk every wedge — past this many
-# wedge steps the distributed tier is the right engine even though the
-# edge list fit in memory.
+# hubs), and the wedge kernel materializes every wedge — past this many
+# wedges the distributed tier is the right engine even though the edge
+# list fit in memory.
 DRIVER_WEDGE_LIMIT = 5_000_000
 
 
@@ -306,55 +310,43 @@ def pagerank_integer(nodes: DataFrame, pairs: DataFrame, iters: int = 5,
     once — a lazy checkpoint would let the final action re-derive
     every round after the persisted edges are released.
 
-    Hybrid: under ``small_edge_limit`` (edges AND node list) the same
-    integer recurrence runs driver-side — 5 rounds over a collected
-    adjacency dict cost milliseconds where 5 eager-checkpointed
-    distributed rounds cost seconds of job scheduling on a reduced
-    near-dup graph.
+    Hybrid: when the edges AND the node list both fit
+    ``small_edge_limit`` the same integer recurrence runs driver-side —
+    5 rounds over a collected adjacency dict cost milliseconds where 5
+    eager-checkpointed distributed rounds cost seconds of job
+    scheduling on a reduced near-dup graph.
     """
-    collected, rest = _collect_canonical(pairs, a_col, b_col, False,
-                                         small_edge_limit)
-    if collected is not None:
-        node_type_e, spark = rest
-        base_df = nodes.select(F.col(node_col).alias("node")).distinct().persist()
-        if base_df.count() <= small_edge_limit:
-            node_type = base_df.schema["node"].dataType
-            base = base_df.toPandas()["node"].tolist()
-            base_df.unpersist()
-            adj = _adjacency(collected)
-            deg = {n: len(adj[n]) for n in adj}
-            p = {n: 1000000 for n in base}
-            for _ in range(iters):
-                c: dict = {}
-                for u, nbrs in adj.items():
-                    pu = p.get(u)
-                    if pu is None:
-                        continue
-                    share = pu // deg[u]
-                    for m in nbrs:
-                        c[m] = c.get(m, 0) + share
-                p = {n: 150000 + (850 * c.get(n, 0)) // 1000 for n in p}
-            from pyspark.sql import types as T
-            schema = T.StructType([
-                T.StructField("node", node_type, False),
-                T.StructField("degree", T.IntegerType(), False),
-                T.StructField("rank_ppm", T.LongType(), False)])
-            return spark.createDataFrame(
-                [(n, deg.get(n, 0), p[n]) for n in sorted(p)], schema)
-        # node list too big for the driver: rebuild the distributed input
-        base_df.unpersist()
-        und_small = spark.createDataFrame(
-            collected, f"x {node_type_e.simpleString()}, "
-                       f"y {node_type_e.simpleString()}")
-        pairs = und_small.select(F.col("x").alias(a_col),
-                                 F.col("y").alias(b_col))
-        und_src = None
-    else:
-        # big graph: the persisted canonical projection becomes the
-        # distributed input — its cache feeds the edges build, released
-        # with the other persists at the end
-        und_src = rest
-        pairs = rest.select(F.col("x").alias(a_col), F.col("y").alias(b_col))
+    und, tbl = _collect_canonical(pairs, a_col, b_col, False,
+                                  small_edge_limit)
+    base_tbl = None if tbl is None else bounded_collect(
+        nodes.select(F.col(node_col).alias("node")).distinct(),
+        small_edge_limit)
+    if base_tbl is not None:
+        und.unpersist()
+        adj = _adjacency(_edge_rows(tbl))
+        deg = {n: len(adj[n]) for n in adj}
+        p = {n: 1000000 for n in base_tbl.column("node").to_pylist()}
+        for _ in range(iters):
+            c: dict = {}
+            for u, nbrs in adj.items():
+                pu = p.get(u)
+                if pu is None:
+                    continue
+                share = pu // deg[u]
+                for m in nbrs:
+                    c[m] = c.get(m, 0) + share
+            p = {n: 150000 + (850 * c.get(n, 0)) // 1000 for n in p}
+        from pyspark.sql import types as T
+        schema = T.StructType([
+            T.StructField("node", nodes.schema[node_col].dataType, False),
+            T.StructField("degree", T.IntegerType(), False),
+            T.StructField("rank_ppm", T.LongType(), False)])
+        return und.sparkSession.createDataFrame(
+            [(n, deg.get(n, 0), p[n]) for n in sorted(p)], schema)
+    # the persisted canonical projection is the distributed input — its
+    # cache feeds the edges build, released with the other persists at
+    # the end
+    pairs = und.select(F.col("x").alias(a_col), F.col("y").alias(b_col))
     edges = (
         pairs.select(F.explode(F.array(
             F.struct(F.col(a_col).alias("src"), F.col(b_col).alias("dst")),
@@ -391,8 +383,7 @@ def pagerank_integer(nodes: DataFrame, pairs: DataFrame, iters: int = 5,
     ed.unpersist()
     edges.unpersist()
     base.unpersist()
-    if und_src is not None:
-        und_src.unpersist()
+    und.unpersist()
     return out
 
 
@@ -424,17 +415,17 @@ def triangle_counts(pairs: DataFrame, a_col: str = "id_a",
     two shuffle joins cost seconds of scheduling); the distributed
     shape above is the big-graph tier.
     """
-    collected, rest = _collect_canonical(pairs, a_col, b_col,
-                                         assume_canonical, small_edge_limit)
-    if collected is not None:
-        node_type, spark = rest
-        tri = _triangle_counter(collected, _adjacency(collected))
+    und, tbl = _collect_canonical(pairs, a_col, b_col, assume_canonical,
+                                  small_edge_limit)
+    if tbl is not None:
+        und.unpersist()
+        rows = _edge_rows(tbl)
+        tri = _triangle_counter(rows, _adjacency(rows))
         from pyspark.sql import types as T
         schema = T.StructType([
-            T.StructField("node", node_type, False),
+            T.StructField("node", und.schema["x"].dataType, False),
             T.StructField("n_triangles", T.LongType(), False)])
-        return spark.createDataFrame(sorted(tri.items()), schema)
-    und = rest
+        return und.sparkSession.createDataFrame(sorted(tri.items()), schema)
     out = _triangles_per_node(und, _degrees(und))  # eager-checkpointed
     und.unpersist()
     return out
@@ -454,23 +445,23 @@ def clustering_coefficient(pairs: DataFrame, a_col: str = "id_a",
     the degree table with the triangle machinery — no extra pass
     over the pair generator. Same driver tier as ``triangle_counts``
     under ``small_edge_limit``."""
-    collected, rest = _collect_canonical(pairs, a_col, b_col,
-                                         assume_canonical, small_edge_limit)
-    if collected is not None:
-        node_type, spark = rest
-        adj = _adjacency(collected)
-        tri = _triangle_counter(collected, adj)
+    und, tbl = _collect_canonical(pairs, a_col, b_col, assume_canonical,
+                                  small_edge_limit)
+    if tbl is not None:
+        und.unpersist()
+        edge_rows = _edge_rows(tbl)
+        adj = _adjacency(edge_rows)
+        tri = _triangle_counter(edge_rows, adj)
         rows = [(n, len(adj[n]), tri.get(n, 0),
                  2 * tri.get(n, 0) * 1000000 // (len(adj[n]) * (len(adj[n]) - 1)))
                 for n in sorted(adj) if len(adj[n]) >= 2]
         from pyspark.sql import types as T
         schema = T.StructType([
-            T.StructField("node", node_type, False),
+            T.StructField("node", und.schema["x"].dataType, False),
             T.StructField("deg", T.LongType(), False),
             T.StructField("n_triangles", T.LongType(), False),
             T.StructField("cc_ppm", T.LongType(), False)])
-        return spark.createDataFrame(rows, schema)
-    und = rest
+        return und.sparkSession.createDataFrame(rows, schema)
     deg = _degrees(und)
     tri = _triangles_per_node(und, deg)
     out = (
@@ -491,7 +482,10 @@ def _canonical_edges(pairs: DataFrame, a_col: str, b_col: str,
                      assume_canonical: bool) -> DataFrame:
     """x<y distinct edge projection. ``assume_canonical``: caller
     guarantees the input is already x<y distinct (true for every
-    near-dup generator in this repo) — skips one shuffle."""
+    near-dup generator in this repo) — skips one shuffle. That
+    guarantee is the caller's alone: neither the driver nor the
+    distributed tier dedups or orients such input, so a duplicate
+    pair counts twice in the degrees and wedges of both tiers."""
     if assume_canonical:
         return pairs.select(F.col(a_col).alias("x"), F.col(b_col).alias("y"))
     return (pairs.select(F.least(a_col, b_col).alias("x"),
@@ -624,54 +618,38 @@ def update_clustering_coefficient(counts: DataFrame, old_pairs: DataFrame,
             F.expr("2 * n_triangles * 1000000 DIV (deg * (deg - 1))")))
 
 
-def _pair_similarity_driver(edge_rows: list[tuple],
-                            cap: int | None,
-                            aa_weights: bool) -> list[tuple] | None:
-    """Driver-side wedge enumeration shared by ``neighbor_jaccard``
-    (aa_weights=False) and ``adamic_adar`` (True) — the identical
-    capped center loop as the distributed self-join, returned as a
-    pandas frame (columns v, w, ...) so the caller rides the Arrow
-    createDataFrame path. Returns None when the capped wedge volume
-    exceeds ``DRIVER_WEDGE_LIMIT`` (the caller falls back to
-    distributed).
-
-    r14 (guide §4.2): integer node ids take a VECTORIZED numpy kernel
-    (segment-pairs wedge enumeration + bincount aggregation — all
-    exact int64/float64-integer arithmetic, bit-identical multisets to
-    the dict loop, pinned in tests/test_r14_optimizations.py); any
-    other id type keeps the dict loop below."""
-    if edge_rows:
-        x0, y0 = edge_rows[0]
-        import numpy as np
-        if (isinstance(x0, (int, np.integer))
-                and not isinstance(x0, bool)
-                and isinstance(y0, (int, np.integer))
-                and not isinstance(y0, bool)):
-            return _pair_similarity_numpy(
-                np.asarray(edge_rows, dtype=np.int64), cap, aa_weights)
-    return _pair_similarity_dicts(edge_rows, cap, aa_weights)
+def _edge_array(tbl):
+    """A collected canonical edge table as an (m, 2) numpy array —
+    the id dtype for numeric ids, an object array for strings."""
+    import numpy as np
+    return np.column_stack([tbl.column("x").to_numpy(),
+                            tbl.column("y").to_numpy()])
 
 
 def _pair_similarity_numpy(e, cap: int | None, aa_weights: bool):
-    """Vectorized wedge enumeration over an (m, 2) int64 canonical
-    edge array. Same semantics as ``_pair_similarity_dicts``, kernel
-    by kernel:
+    """Driver-side wedge enumeration shared by ``neighbor_jaccard``
+    (aa_weights=False) and ``adamic_adar`` (True): the same capped
+    center loop as the distributed self-join, vectorized over an (m, 2)
+    canonical edge array of any orderable id type. Returns a pandas
+    frame (columns v, w, ...) for the Arrow createDataFrame path, or
+    None when the capped wedge volume exceeds ``DRIVER_WEDGE_LIMIT``
+    (the caller falls back to distributed). Step by step:
 
-    - degrees: bincount over the symmetrized endpoint list == len of
-      each adjacency set (edges are x<y DISTINCT by the
-      ``_canonical_edges`` contract — the same distinctness the
-      distributed groupBy-count path already relies on);
-    - eligible centers (deg <= cap) and the identical wedge-volume
-      budget check against ``DRIVER_WEDGE_LIMIT``;
+    - ids are remapped to 0..n-1 by np.unique(return_inverse=True),
+      which orders them by value — ints and strings alike;
+    - degrees: bincount over the symmetrized endpoint list — the same
+      per-endpoint count the distributed groupBy-count takes (edges are
+      x<y DISTINCT by the ``_canonical_edges`` contract);
+    - eligible centers (deg <= cap) and the wedge-volume budget check
+      against ``DRIVER_WEDGE_LIMIT``;
     - all i<j neighbor pairs per center via the segment-pairs
       construction (repeat/cumsum index arithmetic — no Python loop);
       neighbors are pre-sorted ascending inside each center block, so
-      pair keys come out (v < w) by node value exactly like the dict
-      loop's sorted(adjacency) iteration;
+      pair keys come out (v < w) by node value, like the distributed
+      tier's v < w filter;
     - aggregation by np.unique on the composite key v_idx·n + w_idx
-      (ids remapped to 0..n-1; n ≤ 2·SMALL_EDGE_LIMIT so the key fits
-      int64 with 10 orders of magnitude to spare). unique returns keys
-      ASCENDING, which is the dict form's sorted(cn) output order.
+      (n ≤ 2·SMALL_EDGE_LIMIT so the key fits int64 with 10 orders of
+      magnitude to spare); keys come out ASCENDING by (v, w);
     - Adamic-Adar sums via bincount(weights=1e6 DIV deg(center)):
       every partial sum is an integer ≤ DRIVER_WEDGE_LIMIT · 1e6
       (5·10¹²) < 2⁵³, so the float64 accumulation is EXACT and the
@@ -729,49 +707,6 @@ def _pair_similarity_numpy(e, cap: int | None, aa_weights: bool):
                          "is_edge": flag})
 
 
-def _pair_similarity_dicts(edge_rows: list[tuple],
-                           cap: int | None,
-                           aa_weights: bool):
-    """The plain-dict center loop (pre-r14 form, kept as the
-    non-integer-id tier and as the equivalence reference in tests)."""
-    adj = _adjacency(edge_rows)
-    deg = {n: len(adj[n]) for n in adj}
-    centers = [n for n in adj if cap is None or deg[n] <= cap]
-    if sum(deg[n] * (deg[n] - 1) // 2 for n in centers) > DRIVER_WEDGE_LIMIT:
-        return None
-    cn: dict = {}
-    aa: dict = {}
-    for u in centers:
-        nb = sorted(adj[u])
-        w_u = 1000000 // deg[u]
-        for i in range(len(nb)):
-            for j in range(i + 1, len(nb)):
-                key = (nb[i], nb[j])
-                cn[key] = cn.get(key, 0) + 1
-                if aa_weights:
-                    aa[key] = aa.get(key, 0) + w_u
-    edges = set(edge_rows)
-    # pandas output: the pair table can be 100k+ rows, and the Arrow
-    # createDataFrame path is ~10x the tuple-list path at that size
-    import pandas as pd
-    keys = sorted(cn)
-    va = [k[0] for k in keys]
-    wa = [k[1] for k in keys]
-    c = [cn[k] for k in keys]
-    flag = ["Y" if k in edges else "N" for k in keys]
-    if aa_weights:
-        return pd.DataFrame({"v": va, "w": wa, "n_common": c,
-                             "aa_ppm": [aa[k] for k in keys],
-                             "is_edge": flag})
-    da = [deg[k[0]] for k in keys]
-    db = [deg[k[1]] for k in keys]
-    return pd.DataFrame({
-        "v": va, "w": wa, "n_common": c, "deg_a": da, "deg_b": db,
-        "jaccard_ppm": [ci * 1000000 // (dai + dbi - ci)
-                        for ci, dai, dbi in zip(c, da, db)],
-        "is_edge": flag})
-
-
 def neighbor_jaccard(pairs: DataFrame, a_col: str = "id_a",
                      b_col: str = "id_b",
                      assume_canonical: bool = False,
@@ -799,32 +734,28 @@ def neighbor_jaccard(pairs: DataFrame, a_col: str = "id_a",
 
     Hybrid: a collected edge list under ``small_edge_limit`` whose
     capped wedge volume also fits ``DRIVER_WEDGE_LIMIT`` runs the SAME
-    center-loop driver-side (dict counters beat two shuffle joins by
-    seconds at reduced-pair-list scale); otherwise distributed."""
-    collected, rest = _collect_canonical(pairs, a_col, b_col,
-                                         assume_canonical, small_edge_limit)
-    if collected is not None:
-        node_type, spark = rest
-        pdf = _pair_similarity_driver(collected, max_center_degree,
-                                      aa_weights=False)
-        if pdf is not None:
-            from pyspark.sql import types as T
-            schema = T.StructType([
-                T.StructField(a_col, node_type, False),
-                T.StructField(b_col, node_type, False),
-                T.StructField("n_common", T.LongType(), False),
-                T.StructField("deg_a", T.LongType(), False),
-                T.StructField("deg_b", T.LongType(), False),
-                T.StructField("jaccard_ppm", T.LongType(), False),
-                T.StructField("is_edge", T.StringType(), False)])
-            pdf.columns = [a_col, b_col, "n_common", "deg_a", "deg_b",
-                           "jaccard_ppm", "is_edge"]
-            return spark.createDataFrame(pdf, schema)
-        # wedge budget exceeded: rebuild the distributed input
-        und = spark.createDataFrame(collected, f"x {node_type.simpleString()}, "
-                                    f"y {node_type.simpleString()}").persist()
-    else:
-        und = rest
+    center loop driver-side (``_pair_similarity_numpy`` beats two
+    shuffle joins by seconds at reduced-pair-list scale); otherwise
+    distributed."""
+    und, tbl = _collect_canonical(pairs, a_col, b_col, assume_canonical,
+                                  small_edge_limit)
+    pdf = None if tbl is None else _pair_similarity_numpy(
+        _edge_array(tbl), max_center_degree, aa_weights=False)
+    if pdf is not None:
+        und.unpersist()
+        node_type = und.schema["x"].dataType
+        from pyspark.sql import types as T
+        schema = T.StructType([
+            T.StructField(a_col, node_type, False),
+            T.StructField(b_col, node_type, False),
+            T.StructField("n_common", T.LongType(), False),
+            T.StructField("deg_a", T.LongType(), False),
+            T.StructField("deg_b", T.LongType(), False),
+            T.StructField("jaccard_ppm", T.LongType(), False),
+            T.StructField("is_edge", T.StringType(), False)])
+        pdf.columns = [a_col, b_col, "n_common", "deg_a", "deg_b",
+                       "jaccard_ppm", "is_edge"]
+        return und.sparkSession.createDataFrame(pdf, schema)
     deg = _degrees(und)
     sym = (und.select(F.col("x").alias("u"), F.col("y").alias("n"))
            .unionAll(und.select(F.col("y").alias("u"), F.col("x").alias("n"))))
@@ -869,28 +800,24 @@ def adamic_adar(pairs: DataFrame, a_col: str = "id_a", b_col: str = "id_b",
     the center's degree rides the wedge row so the weight needs no
     extra join. ``max_center_degree`` caps hub fan-out exactly as in
     ``neighbor_jaccard`` — the SQL oracle mirrors the same cap, and the
-    same driver tier runs the loop in dicts under the edge + wedge
+    same driver tier runs the wedge kernel under the edge + wedge
     budgets. Output: (a_col, b_col, n_common, aa_ppm, is_edge)."""
-    collected, rest = _collect_canonical(pairs, a_col, b_col,
-                                         assume_canonical, small_edge_limit)
-    if collected is not None:
-        node_type, spark = rest
-        pdf = _pair_similarity_driver(collected, max_center_degree,
-                                      aa_weights=True)
-        if pdf is not None:
-            from pyspark.sql import types as T
-            schema = T.StructType([
-                T.StructField(a_col, node_type, False),
-                T.StructField(b_col, node_type, False),
-                T.StructField("n_common", T.LongType(), False),
-                T.StructField("aa_ppm", T.LongType(), False),
-                T.StructField("is_edge", T.StringType(), False)])
-            pdf.columns = [a_col, b_col, "n_common", "aa_ppm", "is_edge"]
-            return spark.createDataFrame(pdf, schema)
-        und = spark.createDataFrame(collected, f"x {node_type.simpleString()}, "
-                                    f"y {node_type.simpleString()}").persist()
-    else:
-        und = rest
+    und, tbl = _collect_canonical(pairs, a_col, b_col, assume_canonical,
+                                  small_edge_limit)
+    pdf = None if tbl is None else _pair_similarity_numpy(
+        _edge_array(tbl), max_center_degree, aa_weights=True)
+    if pdf is not None:
+        und.unpersist()
+        node_type = und.schema["x"].dataType
+        from pyspark.sql import types as T
+        schema = T.StructType([
+            T.StructField(a_col, node_type, False),
+            T.StructField(b_col, node_type, False),
+            T.StructField("n_common", T.LongType(), False),
+            T.StructField("aa_ppm", T.LongType(), False),
+            T.StructField("is_edge", T.StringType(), False)])
+        pdf.columns = [a_col, b_col, "n_common", "aa_ppm", "is_edge"]
+        return und.sparkSession.createDataFrame(pdf, schema)
     deg = _degrees(und)
     sym = (und.select(F.col("x").alias("u"), F.col("y").alias("n"))
            .unionAll(und.select(F.col("y").alias("u"), F.col("x").alias("n"))))
@@ -928,10 +855,7 @@ def _kcore_driver(edge_rows: list[tuple], k: int, max_rounds: int,
     tiers are interchangeable and both match the unrolled SQL oracle."""
     from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 
-    adj: dict = {}
-    for x, y in edge_rows:
-        adj.setdefault(x, set()).add(y)
-        adj.setdefault(y, set()).add(x)
+    adj = _adjacency(edge_rows)
     all_nodes = list(adj)
     alive = set(all_nodes)
     deg = {n: len(adj[n]) for n in all_nodes}
@@ -1000,15 +924,12 @@ def kcore_peel(pairs: DataFrame, k: int = 3, max_rounds: int = 30,
     Output: (node, in_kcore Y/N, core_degree) for every endpoint of
     the input pair list — core_degree is the node's degree within the
     survivor-induced subgraph (0 for peeled nodes)."""
-    und = _canonical_edges(pairs, a_col, b_col, assume_canonical).persist()
-    n_pairs = und.count()
-    if n_pairs <= small_edge_limit:
-        node_type = und.schema["x"].dataType
-        spark = und.sparkSession
-        pdf = und.toPandas()  # Arrow: two primitive columns, no Rows
+    und, tbl = _collect_canonical(pairs, a_col, b_col, assume_canonical,
+                                  small_edge_limit)
+    if tbl is not None:
         und.unpersist()
-        rows = list(zip(pdf["x"].tolist(), pdf["y"].tolist()))
-        return _kcore_driver(rows, k, max_rounds, spark, node_type)
+        return _kcore_driver(_edge_rows(tbl), k, max_rounds,
+                             und.sparkSession, und.schema["x"].dataType)
     nodes = (und.select(F.col("x").alias("node"))
              .unionAll(und.select(F.col("y").alias("node")))
              .distinct().persist())

@@ -14,6 +14,7 @@ from dht11_data_pipeline_spark.functions.text import (
     LANG_MARKERS, distinct_shingles, marker_score, punct_count,
     stopword_count, token_count, tokens,
 )
+from dht11_data_pipeline_spark.operators.collect import bounded_collect
 
 
 def quality_metrics(df: DataFrame, text_col: str = "text",
@@ -835,7 +836,7 @@ def _bpe_merges_driver(word_freqs: list[tuple[str, int]],
 
 def bpe_vocab(df: DataFrame, k: int = 6,
               text_col: str = "text", id_col: str = "doc_id",
-              driver_vocab_limit: int | None = BPE_DRIVER_VOCAB_LIMIT,
+              driver_vocab_limit: int = BPE_DRIVER_VOCAB_LIMIT,
               ) -> DataFrame:
     """Byte-pair-encoding vocabulary induction, capped at ``k`` merge
     rounds — the tokenizer-side operator between the text statistics
@@ -873,19 +874,18 @@ def bpe_vocab(df: DataFrame, k: int = 6,
 
     Hybrid tiers (r13): the merge rounds are vocabulary-bounded work,
     so under the driver gate the k rounds run DRIVER-SIDE over one
-    Arrow collect of the (word, freq) table (``_bpe_merges_driver`` —
-    bit-identical semantics, pinned against the distributed tier in
+    bounded collect of the (word, freq) table (``_bpe_merges_driver``
+    — bit-identical semantics, pinned against the distributed tier in
     tests), replacing 2 driver-round-trip jobs per round (pair-count
     collect + eager checkpoint) with one collect. The gate (ADVICE
     r13) is two-sided: ``driver_vocab_limit`` bounds the collect size
     AND ``BPE_DRIVER_KN_LIMIT`` bounds the single-threaded merge work
     k·n_words — a 1M-word vocabulary is driver-eligible at k=6 but
-    not at k=64. Gating costs one persist + count() job on every call
-    (also on runs that end up distributed); that is the price of not
-    collecting an unbounded frame blind. Above the gate the
-    distributed loop below runs unchanged — the 100 TB path when the
-    vocabulary itself outgrows the driver. Pass
-    ``driver_vocab_limit=None`` to force the distributed tier.
+    not at k=64. Both bounds fold into one row budget for
+    ``collect.bounded_collect``, which gates and collects in the same
+    jobs; above it the distributed loop below runs unchanged — the
+    100 TB path when the vocabulary itself outgrows the driver. Pass
+    ``driver_vocab_limit=0`` to force the distributed tier.
 
     Returns one row per merge: (merge_rank, pair, merged, pair_count).
     """
@@ -901,23 +901,18 @@ def bpe_vocab(df: DataFrame, k: int = 6,
              .groupBy("word")
              .agg(F.count(F.lit(1)).cast("bigint").alias("freq")))
     out_schema = "merge_rank int, pair string, merged string, pair_count bigint"
-    if driver_vocab_limit is not None:
-        words = words.persist()
-        n_words = words.count()
-        if (n_words <= driver_vocab_limit
-                and int(k) * n_words <= BPE_DRIVER_KN_LIMIT):
-            pdf = words.toPandas()  # Arrow: two narrow columns
-            words.unpersist()
-            merges = _bpe_merges_driver(
-                list(zip(pdf["word"].tolist(), pdf["freq"].tolist())),
-                int(k))
-            return spark.createDataFrame(merges, out_schema)
+    # n ≤ limit and k·n ≤ KN_LIMIT ⟺ n ≤ min(limit, KN_LIMIT DIV k)
+    tbl = bounded_collect(
+        words, min(driver_vocab_limit, BPE_DRIVER_KN_LIMIT // int(k)))
+    if tbl is not None:
+        merges = _bpe_merges_driver(
+            list(zip(tbl.column("word").to_pylist(),
+                     tbl.column("freq").to_pylist())), int(k))
+        return spark.createDataFrame(merges, out_schema)
     cur = words.select(
         F.concat(F.lit(" "), F.regexp_replace("word", "(.)", "$1 "))
         .alias("syms"),
         "freq").localCheckpoint(eager=True)
-    if driver_vocab_limit is not None:
-        words.unpersist()  # the checkpoint above was its last consumer
 
     merges: list[tuple[int, str, str, int]] = []
     for rank in range(1, int(k) + 1):

@@ -132,7 +132,7 @@ def test_bpe_vocab_driver_tier_matches_distributed(spark):
     drv = [tuple(r) for r in textops.bpe_vocab(docs, k=6)
            .orderBy("merge_rank").collect()]
     dist = [tuple(r) for r in
-            textops.bpe_vocab(docs, k=6, driver_vocab_limit=None)
+            textops.bpe_vocab(docs, k=6, driver_vocab_limit=0)
             .orderBy("merge_rank").collect()]
     assert drv == dist and len(drv) == 6
 

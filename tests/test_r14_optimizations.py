@@ -5,7 +5,10 @@ float tolerance where only summation order moved (kmeans means)."""
 
 from __future__ import annotations
 
+from collections import Counter
+
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from dht11_data_pipeline_spark.operators import dedup, pq, textops
@@ -196,7 +199,7 @@ def test_bpe_tiers_agree_on_carriage_return_token(spark):
         [(1, "ab\rab ab\rab cd cd cd"), (2, "ab\rab xx yy")],
         "doc_id long, text string")
     drv = textops.bpe_vocab(df, k=3).collect()
-    dist = textops.bpe_vocab(df, k=3, driver_vocab_limit=None).collect()
+    dist = textops.bpe_vocab(df, k=3, driver_vocab_limit=0).collect()
     assert sorted(map(tuple, drv)) == sorted(map(tuple, dist))
 
 
@@ -214,24 +217,12 @@ def test_bpe_kn_gate_falls_through_to_distributed(spark, monkeypatch):
 
 
 # ---------------------------------------------------------------------------
-# graph: numpy wedge kernel == the dict center loop, row for row
+# graph: the numpy wedge kernel (driver tier) == the distributed tier
 # ---------------------------------------------------------------------------
 
-def _wedge_frames_equal(pdf_a, pdf_b):
-    assert list(pdf_a.columns) == list(pdf_b.columns)
-    assert len(pdf_a) == len(pdf_b)
-    for col in pdf_a.columns:
-        av = list(pdf_a[col])
-        bv = list(pdf_b[col])
-        assert av == bv, col
-
-
-def test_wedge_numpy_kernel_matches_dict_loop():
-    """Dense random-ish graph with hubs past the center cap: the
-    vectorized kernel must reproduce the dict loop's rows, values AND
-    row order for both flavors (AA weights / jaccard)."""
-    import numpy as np
-    from dht11_data_pipeline_spark.operators import graph
+def _hub_graph_pairs():
+    """Dense random-ish graph plus 2 hubs wired to most nodes, so a
+    center cap of 10 actually excludes them."""
     rng = [(a * 7919 + b * 104729) % 97 for a in range(40) for b in range(3)]
     edges = set()
     nodes = list(range(1, 30)) + [1000, 2000]  # 2 hub ids
@@ -240,25 +231,28 @@ def test_wedge_numpy_kernel_matches_dict_loop():
         b = nodes[(r // 7 + i) % len(nodes)]
         if a != b:
             edges.add((min(a, b), max(a, b)))
-    # wire the hubs to most nodes so the cap actually excludes them
     for m in nodes[:20]:
         edges.add((min(m, 1000), max(m, 1000)))
         edges.add((min(m, 2000), max(m, 2000)))
-    edge_rows = sorted(edges)
-    for aa in (True, False):
-        for cap in (None, 10):
-            ref = graph._pair_similarity_dicts(edge_rows, cap, aa)
-            got = graph._pair_similarity_numpy(
-                np.asarray(edge_rows, dtype=np.int64), cap, aa)
-            _wedge_frames_equal(got, ref)
+    return sorted(edges)
 
 
-def test_wedge_driver_falls_back_to_dicts_for_string_ids():
+@pytest.mark.parametrize("cap", [None, 10])
+@pytest.mark.parametrize("id_type", ["bigint", "string"])
+def test_wedge_driver_tier_matches_distributed(spark, id_type, cap):
+    """One kernel for every id type: neighbor_jaccard and adamic_adar
+    on the driver tier must emit the distributed tier's rows (as a
+    multiset) for integer ids and for string ids, whose order differs
+    ("1000" < "2"), with and without the hub cap."""
     from dht11_data_pipeline_spark.operators import graph
-    edge_rows = [("a", "b"), ("a", "c"), ("b", "c"), ("b", "d")]
-    got = graph._pair_similarity_driver(edge_rows, None, False)
-    ref = graph._pair_similarity_dicts(edge_rows, None, False)
-    _wedge_frames_equal(got, ref)
+    edges = _hub_graph_pairs()
+    if id_type == "string":
+        edges = [(str(a), str(b)) for a, b in edges]
+    pairs = spark.createDataFrame(edges, f"id_a {id_type}, id_b {id_type}")
+    for op in (graph.neighbor_jaccard, graph.adamic_adar):
+        drv = op(pairs, max_center_degree=cap).collect()
+        dist = op(pairs, max_center_degree=cap, small_edge_limit=0).collect()
+        assert drv and Counter(map(tuple, drv)) == Counter(map(tuple, dist))
 
 
 def test_wedge_numpy_respects_wedge_limit(monkeypatch):
@@ -268,7 +262,6 @@ def test_wedge_numpy_respects_wedge_limit(monkeypatch):
     monkeypatch.setattr(graph, "DRIVER_WEDGE_LIMIT", 1)
     assert graph._pair_similarity_numpy(
         np.asarray(edge_rows, dtype=np.int64), None, True) is None
-    assert graph._pair_similarity_dicts(edge_rows, None, True) is None
 
 
 # ---------------------------------------------------------------------------

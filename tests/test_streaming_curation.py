@@ -21,9 +21,13 @@ def _write_feed(tmp_path, rows, n_batches=3):
     os.makedirs(src)
     per = (len(rows) + n_batches - 1) // n_batches
     for i in range(n_batches):
-        with open(os.path.join(src, f"b{i}.json"), "w") as f:
+        path = os.path.join(src, f"b{i}.json")
+        with open(path, "w") as f:
             for r in rows[i * per:(i + 1) * per]:
                 f.write(json.dumps(r) + "\n")
+        # the file source orders by mtime (ms resolution): files written
+        # within one millisecond would reach the batches in listing order
+        os.utime(path, (1_700_000_000 + i, 1_700_000_000 + i))
     return src
 
 

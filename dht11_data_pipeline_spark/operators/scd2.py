@@ -210,35 +210,6 @@ def dense_rank_distributed(df: DataFrame, order_cols: list[str],
             .drop("_dr_pid", "_dr_off"))
 
 
-def allocate_surrogate_keys(df: DataFrame, high_water: int, out_col: str,
-                            order_cols: list[str] | None = None,
-                            deterministic: bool = False) -> DataFrame:
-    """Mint surrogate keys strictly above ``high_water``.
-
-    Scale path (default): ``monotonically_increasing_id()`` — unique,
-    parallel, no shuffle; keys are sparse but the pipeline contract is
-    only uniqueness + monotonicity above the high-water mark (reference
-    Delta_detection_query_gen.py:39,253-283 — SURVEY §7.4.1).
-
-    ``deterministic=True``: dense keys ordered by ``order_cols`` — the
-    reference's ``ROW_NUMBER() OVER (ORDER BY 'JP')`` semantics, minted
-    via ``dense_rank_distributed`` (range-partitioned numbering +
-    offsets), so even the deterministic path never funnels the insert
-    set through one partition.
-    """
-    if deterministic:
-        if not order_cols:
-            raise ValueError("deterministic allocation needs order_cols")
-        return (dense_rank_distributed(df, order_cols, "_sk_rank")
-                .withColumn(out_col, (F.col("_sk_rank") + F.lit(high_water))
-                            .cast("decimal(18,0)"))
-                .drop("_sk_rank"))
-    return df.withColumn(
-        out_col,
-        (F.monotonically_increasing_id() + F.lit(high_water) + 1).cast("decimal(18,0)"),
-    )
-
-
 def apply_scd2(staging: DataFrame, target: DataFrame, cfg: SCD2Config,
                load_ts: str | None = None,
                deterministic_keys: bool = False,

@@ -21,9 +21,9 @@ semantics a delta-dedup gate needs: "is this document already covered
 by what we have ingested so far".
 
 Replays are idempotent: every write is a batch-keyed overwrite and a
-batch excludes its own store partition from the store it probes, so a
-redelivered batch reproduces its original verdicts instead of
-self-matching (the streaming/dedup.py discipline).
+batch excludes its own store partition from the store it probes
+(``streaming/runner.prior_store``), so a redelivered batch reproduces
+its original verdicts instead of self-matching.
 """
 
 from __future__ import annotations
@@ -32,10 +32,11 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
-from pyspark.sql.utils import AnalysisException
 
 from dht11_data_pipeline_spark.operators.dedup import (
     CDC_DIVISOR, CDC_WINDOW, cdc_chunks)
+from dht11_data_pipeline_spark.streaming.runner import (
+    json_stream, prior_store, start_batches)
 
 DOC_SCHEMA = T.StructType([
     T.StructField("doc_id", T.LongType()),
@@ -46,31 +47,21 @@ def start_cdc_dedup_stream(spark: SparkSession, source_path: str,
                            state_dir: str, verdicts_dir: str,
                            checkpoint_dir: str,
                            window: int = CDC_WINDOW,
-                           divisor: int = CDC_DIVISOR,
-                           max_files_per_trigger: int | None = 1,
-                           available_now: bool = True) -> StreamingQuery:
+                           divisor: int = CDC_DIVISOR) -> StreamingQuery:
     """readStream JSON-lines documents → per-batch prefix dedup
     verdicts at ``verdicts_dir`` (doc_id, n_chunks, n_chars,
     dup_chunk_chars_so_far, partition batch=N) while growing the
     chunk store under ``state_dir/chunks``."""
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        s = batch_df.sparkSession
         chunks = cdc_chunks(batch_df, window=window,
                             divisor=divisor).localCheckpoint(eager=True)
-        try:
-            store = (s.read.parquet(f"{state_dir}/chunks")
-                     .filter(F.col("batch") != batch_id)
-                     .select("doc_id", "chunk_hash"))
-        except AnalysisException:  # first batch: store not created yet
-            store = s.createDataFrame([], "doc_id bigint, chunk_hash string")
         # a chunk of a NEW doc is already-covered if its hash exists in
         # the store under ANY doc, or under a DIFFERENT doc of this
         # batch (same-doc repeats don't make a doc a duplicate of
         # itself — matches the batch operator's countDistinct(doc_id))
-        seen = store.select("chunk_hash").distinct()
+        seen = prior_store(batch_df.sparkSession, f"{state_dir}/chunks",
+                           "chunk_hash string", batch_id).distinct()
         n_batch_docs = F.count(F.lit(1)).over(
             Window.partitionBy("chunk_hash"))
         g = (chunks.groupBy("chunk_hash", "doc_id")
@@ -94,15 +85,8 @@ def start_cdc_dedup_stream(spark: SparkSession, source_path: str,
         chunks.write.mode("overwrite").parquet(
             f"{state_dir}/chunks/batch={batch_id}")
 
-    reader = spark.readStream.schema(DOC_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    writer = (reader.json(source_path)
-              .writeStream.foreachBatch(_process)
-              .option("checkpointLocation", checkpoint_dir))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_batches(json_stream(spark, DOC_SCHEMA, source_path),
+                         _process, checkpoint_dir)
 
 
 def current_cdc_stats(spark: SparkSession, state_dir: str) -> DataFrame:

@@ -34,6 +34,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from dht11_data_pipeline_spark.operators.curation import (
     _hash_bucket, weighted_gate_projection)
+from dht11_data_pipeline_spark.streaming.runner import json_stream, start_batches
 
 WEIGHTED_DOC_SCHEMA = T.StructType([
     T.StructField("doc_id", T.LongType()),
@@ -263,25 +264,21 @@ def dsir_keep_stream(df: DataFrame, bucket_ratios: dict[int, int],
 
 def start_weighted_keep_stream(spark: SparkSession, source_path: str,
                                out_dir: str, checkpoint_dir: str,
-                               w_max: int, rate_ppm: int = 500_000,
-                               max_files_per_trigger: int | None = 1,
-                               available_now: bool = True
+                               w_max: int, rate_ppm: int = 500_000
                                ) -> StreamingQuery:
     """readStream JSON-lines (doc_id, weight) → gated parquet rows at
     ``out_dir``. Append-only stateless pipeline: exactly-once via the
-    file-sink manifest, no state store to size or upgrade."""
-    reader = spark.readStream.schema(WEIGHTED_DOC_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    gated = weighted_keep_stream(reader.json(source_path), w_max,
-                                 rate_ppm=rate_ppm)
-    writer = (gated.writeStream.format("parquet")
-              .option("path", out_dir)
-              .option("checkpointLocation", checkpoint_dir)
-              .outputMode("append"))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    file-sink manifest, no state store to size or upgrade — so it keeps
+    its own parquet file sink instead of ``runner.start_batches``."""
+    gated = weighted_keep_stream(
+        json_stream(spark, WEIGHTED_DOC_SCHEMA, source_path), w_max,
+        rate_ppm=rate_ppm)
+    return (gated.writeStream.format("parquet")
+            .option("path", out_dir)
+            .option("checkpointLocation", checkpoint_dir)
+            .outputMode("append")
+            .trigger(availableNow=True)
+            .start())
 
 
 TEXT_DOC_SCHEMA = T.StructType([
@@ -295,9 +292,7 @@ def start_source_divergence_stream(spark: SparkSession, source_path: str,
                                    out_dir: str, checkpoint_dir: str,
                                    ref_ppm: dict[str, int],
                                    group_col: str = "source",
-                                   text_col: str = "text",
-                                   max_files_per_trigger: int | None = 1,
-                                   available_now: bool = True
+                                   text_col: str = "text"
                                    ) -> StreamingQuery:
     """Streaming per-source drift monitor: each micro-batch of
     documents is scored against the DECLARED reference unigram profile
@@ -335,15 +330,8 @@ def start_source_divergence_stream(spark: SparkSession, source_path: str,
          .option("partitionOverwriteMode", "dynamic")
          .parquet(out_dir))
 
-    reader = spark.readStream.schema(TEXT_DOC_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    writer = (reader.json(source_path)
-              .writeStream.foreachBatch(_process)
-              .option("checkpointLocation", checkpoint_dir))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_batches(json_stream(spark, TEXT_DOC_SCHEMA, source_path),
+                         _process, checkpoint_dir)
 
 
 def contamination_gate_stream(df: DataFrame, flagged_grams: list[str],

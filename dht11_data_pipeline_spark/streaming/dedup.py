@@ -5,10 +5,11 @@ Each micro-batch of documents is checked against everything ingested
 before it (operators/dedup.minhash_incremental_pairs: sketch only the
 batch, band-join vs the signature store, verify by point lookups) and
 then appended to the store. Every state/output write is keyed by
-``batch=<id>`` with per-partition overwrite, so a replayed batch
-rewrites its own partition instead of duplicating rows — the same
-idempotency-by-batch-key discipline as the reference's load_key ledger
-(STG_to_INT.py:16-20) and our foreachBatch SCD2 sink.
+``batch=<id>`` with per-partition overwrite, and every store read
+leaves out the batch's own partition (``streaming/runner.prior_store``),
+so a replayed batch neither matches its own documents nor duplicates
+rows — the same idempotency-by-batch-key discipline as the reference's
+load_key ledger (STG_to_INT.py:16-20) and our foreachBatch SCD2 sink.
 
 Pair-completeness invariant (tested): a duplicate pair is emitted by
 exactly one batch — the one where its later member arrives — so the
@@ -24,10 +25,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
-from pyspark.sql.utils import AnalysisException
 
 from dht11_data_pipeline_spark.operators.dedup import (
     minhash_incremental_pairs, minhash_signature)
+from dht11_data_pipeline_spark.streaming.runner import (
+    json_stream, prior_store, start_batches)
 
 DOC_SCHEMA = T.StructType([
     T.StructField("doc_id", T.LongType()),
@@ -43,60 +45,50 @@ DOC_SCHEMA = T.StructType([
 _SIG_SCHEMA = "doc_id long, signature array<bigint>"
 
 
-def _read_or_empty(spark: SparkSession, path: str, schema: str) -> DataFrame:
-    cols = [f.split()[0] for f in schema.split(",")]
-    try:
-        # project away the batch=N partition column the store layout adds
-        return spark.read.parquet(path).select(*cols)
-    except AnalysisException:  # first batch: store not created yet
-        return spark.createDataFrame([], schema)
+def _batch_pairs(batch_df: DataFrame, batch_id: int, state_dir: str,
+                 threshold: float) -> DataFrame:
+    """Near-dup pairs of the batch's documents against the store (minus
+    the batch's own partitions) and against each other."""
+    s = batch_df.sparkSession
+    old_docs = prior_store(s, f"{state_dir}/docs", "doc_id long, text string",
+                           batch_id)
+    old_sigs = prior_store(s, f"{state_dir}/sigs", _SIG_SCHEMA, batch_id)
+    corpus = old_docs.unionByName(batch_df.select("doc_id", "text"))
+    return minhash_incremental_pairs(corpus, old_sigs, batch_df,
+                                     threshold=threshold)
+
+
+def _append_store(batch_df: DataFrame, batch_id: int, state_dir: str) -> None:
+    minhash_signature(batch_df).write.mode("overwrite").parquet(
+        f"{state_dir}/sigs/batch={batch_id}")
+    batch_df.select("doc_id", "text").write.mode("overwrite").parquet(
+        f"{state_dir}/docs/batch={batch_id}")
 
 
 def start_minhash_dedup_stream(spark: SparkSession, source_path: str,
                                state_dir: str, pairs_dir: str,
                                checkpoint_dir: str,
-                               threshold: float = 0.5,
-                               max_files_per_trigger: int | None = 1,
-                               available_now: bool = True) -> StreamingQuery:
+                               threshold: float = 0.5) -> StreamingQuery:
     """readStream JSON-lines documents → per-batch near-dup pairs at
     ``pairs_dir`` (columns doc_a, doc_b, jaccard, partition batch=N)
     while growing the doc/signature store under ``state_dir``."""
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         batch_df = batch_df.persist()
-        s = batch_df.sparkSession
-        old_docs = _read_or_empty(s, f"{state_dir}/docs", "doc_id long, text string")
-        old_sigs = _read_or_empty(s, f"{state_dir}/sigs", _SIG_SCHEMA)
-        corpus = old_docs.unionByName(batch_df.select("doc_id", "text"))
-        pairs = minhash_incremental_pairs(
-            corpus, old_sigs, batch_df, threshold=threshold)
+        pairs = _batch_pairs(batch_df, batch_id, state_dir, threshold)
         # batch-keyed overwrites: replays rewrite, never duplicate
         pairs.write.mode("overwrite").parquet(f"{pairs_dir}/batch={batch_id}")
-        minhash_signature(batch_df).write.mode("overwrite").parquet(
-            f"{state_dir}/sigs/batch={batch_id}")
-        batch_df.select("doc_id", "text").write.mode("overwrite").parquet(
-            f"{state_dir}/docs/batch={batch_id}")
+        _append_store(batch_df, batch_id, state_dir)
         batch_df.unpersist()
 
-    reader = spark.readStream.schema(DOC_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    writer = (reader.json(source_path)
-              .writeStream.foreachBatch(_process)
-              .option("checkpointLocation", checkpoint_dir))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_batches(json_stream(spark, DOC_SCHEMA, source_path),
+                         _process, checkpoint_dir)
 
 
 def start_cluster_stream(spark: SparkSession, source_path: str,
                          state_dir: str, labels_dir: str,
                          checkpoint_dir: str,
-                         threshold: float = 0.5,
-                         max_files_per_trigger: int | None = 1,
-                         available_now: bool = True) -> StreamingQuery:
+                         threshold: float = 0.5) -> StreamingQuery:
     """Continuous duplicate CLUSTERING: each micro-batch's near-dup
     pairs (vs the growing store, as above) are folded into a persistent
     label table via graph.update_components — the streaming form of
@@ -117,15 +109,10 @@ def start_cluster_stream(spark: SparkSession, source_path: str,
     from dht11_data_pipeline_spark.operators.graph import update_components
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         batch_df = batch_df.persist()
         s = batch_df.sparkSession
-        old_docs = _read_or_empty(s, f"{state_dir}/docs", "doc_id long, text string")
-        old_sigs = _read_or_empty(s, f"{state_dir}/sigs", _SIG_SCHEMA)
-        corpus = old_docs.unionByName(batch_df.select("doc_id", "text"))
-        pairs = minhash_incremental_pairs(
-            corpus, old_sigs, batch_df, threshold=threshold).persist()
+        pairs = _batch_pairs(batch_df, batch_id, state_dir,
+                             threshold).persist()
 
         # fold pairs + this batch's singletons into the label store
         latest = os.path.join(labels_dir, "_LATEST")
@@ -154,30 +141,19 @@ def start_cluster_stream(spark: SparkSession, source_path: str,
             if d.startswith("batch=") and p != out:
                 shutil.rmtree(p, ignore_errors=True)
 
-        minhash_signature(batch_df).write.mode("overwrite").parquet(
-            f"{state_dir}/sigs/batch={batch_id}")
-        batch_df.select("doc_id", "text").write.mode("overwrite").parquet(
-            f"{state_dir}/docs/batch={batch_id}")
+        _append_store(batch_df, batch_id, state_dir)
         pairs.unpersist()
         batch_df.unpersist()
 
-    reader = spark.readStream.schema(DOC_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    writer = (reader.json(source_path)
-              .writeStream.foreachBatch(_process)
-              .option("checkpointLocation", checkpoint_dir))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_batches(json_stream(spark, DOC_SCHEMA, source_path),
+                         _process, checkpoint_dir)
 
 
 def start_bloom_dedup_stream(spark: SparkSession, source_path: str,
                              state_dir: str, verdicts_dir: str,
                              checkpoint_dir: str,
-                             num_bits: int = 65536, num_hashes: int = 4,
-                             max_files_per_trigger: int | None = 1,
-                             available_now: bool = True) -> StreamingQuery:
+                             num_bits: int = 65536, num_hashes: int = 4
+                             ) -> StreamingQuery:
     """Streaming EXACT dedup with the Bloom front door
     (operators/dedup.bloom_probe_new_docs): each micro-batch is probed
     against the accumulated filter; hits are exact-verified against the
@@ -203,21 +179,13 @@ def start_bloom_dedup_stream(spark: SparkSession, source_path: str,
         _bloom_positions, _content_key, bloom_build_words)
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         batch_df = batch_df.persist()
         s = batch_df.sparkSession
-        # prior state, excluding this batch's own (replayed) partitions
-        try:
-            words = (s.read.parquet(f"{state_dir}/words")
-                     .filter(F.col("batch") != batch_id)
-                     .groupBy("word_idx").agg(F.bit_or("word").alias("word")))
-            hashes = (s.read.parquet(f"{state_dir}/hashes")
-                      .filter(F.col("batch") != batch_id)
-                      .select("content_hash"))
-        except AnalysisException:  # first batch: no store yet
-            words = s.createDataFrame([], "word_idx int, word long")
-            hashes = s.createDataFrame([], "content_hash string")
+        words = (prior_store(s, f"{state_dir}/words",
+                             "word_idx int, word long", batch_id)
+                 .groupBy("word_idx").agg(F.bit_or("word").alias("word")))
+        hashes = prior_store(s, f"{state_dir}/hashes",
+                             "content_hash string", batch_id)
 
         bpos = batch_df.select(
             "doc_id",
@@ -274,15 +242,8 @@ def start_bloom_dedup_stream(spark: SparkSession, source_path: str,
             f"{state_dir}/hashes/batch={batch_id}")
         batch_df.unpersist()
 
-    reader = spark.readStream.schema(DOC_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    writer = (reader.json(source_path)
-              .writeStream.foreachBatch(_process)
-              .option("checkpointLocation", checkpoint_dir))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_batches(json_stream(spark, DOC_SCHEMA, source_path),
+                         _process, checkpoint_dir)
 
 
 def current_labels(spark: SparkSession, labels_dir: str) -> DataFrame:
@@ -297,9 +258,7 @@ def current_labels(spark: SparkSession, labels_dir: str) -> DataFrame:
 def start_phash_dedup_stream(spark: SparkSession, source_path: str,
                              state_dir: str, pairs_dir: str,
                              verdicts_dir: str, checkpoint_dir: str,
-                             max_hamming: int = 3,
-                             max_files_per_trigger: int | None = 1,
-                             available_now: bool = True) -> StreamingQuery:
+                             max_hamming: int = 3) -> StreamingQuery:
     """Streaming IMAGE near-dup: the perceptual-hash pipeline in its
     incremental home. Each micro-batch synthesizes + decodes its image
     payloads (real codec, Arrow batches), computes the 64-bit aHash,
@@ -321,18 +280,12 @@ def start_phash_dedup_stream(spark: SparkSession, source_path: str,
         attach_image_payload, phash_payloads)
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         s = batch_df.sparkSession
         ph = phash_payloads(attach_image_payload(batch_df)).select(
             "doc_id", "phash_hi", "phash_lo").localCheckpoint()
-        try:
-            store = (s.read.parquet(f"{state_dir}/hashes")
-                     .filter(F.col("batch") != batch_id)
-                     .select("doc_id", "phash_hi", "phash_lo"))
-        except AnalysisException:  # first batch: no store yet
-            store = s.createDataFrame(
-                [], "doc_id long, phash_hi long, phash_lo long")
+        store = prior_store(s, f"{state_dir}/hashes",
+                            "doc_id long, phash_hi long, phash_lo long",
+                            batch_id)
         cross = (phash_hamming_pairs(ph, max_hamming=max_hamming, other=store)
                  .select(F.least("doc_a", "doc_b").alias("doc_a"),
                          F.greatest("doc_a", "doc_b").alias("doc_b"),
@@ -356,12 +309,5 @@ def start_phash_dedup_stream(spark: SparkSession, source_path: str,
             f"{verdicts_dir}/batch={batch_id}")
         ph.write.mode("overwrite").parquet(f"{state_dir}/hashes/batch={batch_id}")
 
-    reader = spark.readStream.schema(DOC_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    writer = (reader.json(source_path)
-              .writeStream.foreachBatch(_process)
-              .option("checkpointLocation", checkpoint_dir))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_batches(json_stream(spark, DOC_SCHEMA, source_path),
+                         _process, checkpoint_dir)

@@ -40,6 +40,7 @@ from dht11_data_pipeline_spark.operators.graph import (
     triangle_counts,
     update_triangle_counts,
 )
+from dht11_data_pipeline_spark.streaming.runner import json_stream, start_batches
 
 EDGE_SCHEMA = "id_a bigint, id_b bigint"
 
@@ -77,15 +78,11 @@ def _read_pile(spark: SparkSession, paths: list[str],
 
 
 def start_triangle_stream(spark: SparkSession, source_path: str,
-                          state_dir: str, checkpoint_dir: str,
-                          max_files_per_trigger: int | None = 1,
-                          available_now: bool = True) -> StreamingQuery:
+                          state_dir: str, checkpoint_dir: str) -> StreamingQuery:
     """readStream JSON-lines edges (id_a, id_b) → maintained per-node
     triangle counts, one ``update_triangle_counts`` fold per batch."""
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         old = _read_pile(spark, _partials(state_dir, "edges", batch_id),
                          "x bigint, y bigint")
         counts_dirs = _partials(state_dir, "counts", batch_id)
@@ -111,15 +108,8 @@ def start_triangle_stream(spark: SparkSession, source_path: str,
         d.write.mode("overwrite").parquet(f"{state_dir}/edges/b{batch_id}")
         d.unpersist()
 
-    reader = spark.readStream.schema(EDGE_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    writer = (reader.json(source_path)
-              .writeStream.foreachBatch(_process)
-              .option("checkpointLocation", checkpoint_dir))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_batches(json_stream(spark, EDGE_SCHEMA, source_path),
+                         _process, checkpoint_dir)
 
 
 def current_triangle_counts(spark: SparkSession,
@@ -132,9 +122,7 @@ def current_triangle_counts(spark: SparkSession,
 
 
 def start_components_stream(spark: SparkSession, source_path: str,
-                            state_dir: str, checkpoint_dir: str,
-                            max_files_per_trigger: int | None = 1,
-                            available_now: bool = True) -> StreamingQuery:
+                            state_dir: str, checkpoint_dir: str) -> StreamingQuery:
     """readStream JSON-lines edges → maintained (node, cluster_id)
     dedup-cluster labels, one ``update_components`` fold per batch.
 
@@ -151,8 +139,6 @@ def start_components_stream(spark: SparkSession, source_path: str,
     )
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         pairs = batch_df.select(F.col("id_a").alias("doc_a"),
                                 F.col("id_b").alias("doc_b"))
         label_dirs = _partials(state_dir, "labels", batch_id)
@@ -165,15 +151,8 @@ def start_components_stream(spark: SparkSession, source_path: str,
         new_labels.write.mode("overwrite").parquet(
             f"{state_dir}/labels/b{batch_id}")
 
-    reader = spark.readStream.schema(EDGE_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    writer = (reader.json(source_path)
-              .writeStream.foreachBatch(_process)
-              .option("checkpointLocation", checkpoint_dir))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_batches(json_stream(spark, EDGE_SCHEMA, source_path),
+                         _process, checkpoint_dir)
 
 
 def current_components(spark: SparkSession, state_dir: str) -> DataFrame:

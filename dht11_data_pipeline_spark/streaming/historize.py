@@ -32,6 +32,7 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
 from dht11_data_pipeline_spark.operators.scd2 import SCD2Config, apply_scd2
+from dht11_data_pipeline_spark.streaming.runner import start_batches
 
 
 def empty_target(spark: SparkSession, staging: DataFrame,
@@ -108,8 +109,9 @@ def scd2_batch_writer(target_path: str, cfg: SCD2Config,
                       control=None,
                       interface: tuple[str, str] | None = None):
     """Build the ``foreachBatch`` function: micro-batch = one reference
-    daily run. Empty batches short-circuit (reference T3 branch,
-    Airflow-DAG.py:563-569).
+    daily run. ``start_scd2_stream`` runs it through
+    ``runner.start_batches``, which skips empty batches (reference T3
+    branch, Airflow-DAG.py:563-569).
 
     SCD2 runs in *incremental* mode: a micro-batch carries only the keys
     that arrived, so absence is "no news", never a physical delete —
@@ -124,8 +126,6 @@ def scd2_batch_writer(target_path: str, cfg: SCD2Config,
     duplicating it."""
 
     def _write(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         spark = batch_df.sparkSession
         load_key = load_key_base + batch_id
         if control is not None and interface is not None:
@@ -180,21 +180,12 @@ def scd2_logged_batch_writer(table_dir: str, cfg: SCD2Config,
 
 def start_scd2_stream(readings: DataFrame, target_path: str,
                       checkpoint_dir: str, cfg: SCD2Config,
-                      available_now: bool = True,
                       control=None,
                       interface: tuple[str, str] | None = None) -> StreamingQuery:
-    """Wire a readings stream into the SCD2 sink.
-
-    ``available_now=True`` drains everything currently in the source
-    then stops — the cron-batch replacement; ``False`` runs continuous
-    micro-batches."""
-    writer = (
-        readings.writeStream
-        .foreachBatch(scd2_batch_writer(target_path, cfg,
-                                        control=control, interface=interface))
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    """Wire a readings stream into the SCD2 sink: drains everything
+    currently in the source, then stops — the cron-batch replacement."""
+    return start_batches(
+        readings,
+        scd2_batch_writer(target_path, cfg,
+                          control=control, interface=interface),
+        checkpoint_dir)

@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from dht11_data_pipeline_spark.sources.firebase_tree import EPOCH_SENTINEL
+from dht11_data_pipeline_spark.streaming.runner import json_stream
 
 # one reading per JSON line: the flattened leaf record plus its device —
 # what a Firebase change-feed / Kafka bridge would emit per update
@@ -40,11 +41,9 @@ def read_reading_stream(spark: SparkSession, path: str,
                         max_files_per_trigger: int | None = None) -> DataFrame:
     """File-source stream of JSON-line readings (micro-batch per file
     group). ``maxFilesPerTrigger`` bounds batch size — the streaming
-    analogue of the reference's one-day batch window."""
-    reader = spark.readStream.schema(READING_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.json(path)
+    analogue of the reference's one-day batch window; the default
+    ``None`` puts every file present in one micro-batch."""
+    return json_stream(spark, READING_SCHEMA, path, max_files_per_trigger)
 
 
 def typed_readings(raw: DataFrame, watermark: str | None = "1 hour") -> DataFrame:

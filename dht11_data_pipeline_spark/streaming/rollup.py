@@ -36,6 +36,7 @@ from pyspark.sql.utils import AnalysisException
 
 from dht11_data_pipeline_spark.operators.rollup import merge_rollups, read_rollup, rollup_batch
 from dht11_data_pipeline_spark.streaming.historize import _recover_target, swap_target
+from dht11_data_pipeline_spark.streaming.runner import json_stream, start_batches
 
 EVENT_SCHEMA = T.StructType([
     T.StructField("event_id", T.LongType()),
@@ -57,27 +58,16 @@ def _with_grain(events: DataFrame) -> DataFrame:
 
 def start_rollup_stream(spark: SparkSession, source_path: str,
                         state_dir: str, checkpoint_dir: str,
-                        keys: list[str] | None = None,
-                        max_files_per_trigger: int | None = 1,
-                        available_now: bool = True) -> StreamingQuery:
+                        keys: list[str] | None = None) -> StreamingQuery:
     """readStream JSON-lines events → one rollup partial per micro-batch."""
     keys = keys or DEFAULT_KEYS
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         rollup_batch(_with_grain(batch_df), keys).write.mode("overwrite").parquet(
             f"{state_dir}/partials/b{batch_id}")
 
-    reader = spark.readStream.schema(EVENT_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    writer = (reader.json(source_path)
-              .writeStream.foreachBatch(_process)
-              .option("checkpointLocation", checkpoint_dir))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_batches(json_stream(spark, EVENT_SCHEMA, source_path),
+                         _process, checkpoint_dir)
 
 
 def read_partials(spark: SparkSession, state_dir: str) -> DataFrame:

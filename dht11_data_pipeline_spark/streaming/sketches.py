@@ -43,35 +43,19 @@ from dht11_data_pipeline_spark.operators.sketches import (
     kmv_signatures,
 )
 from dht11_data_pipeline_spark.streaming.rollup import EVENT_SCHEMA
-
-
-def _start(spark: SparkSession, source_path: str, checkpoint_dir: str,
-           process, max_files_per_trigger: int | None,
-           available_now: bool) -> StreamingQuery:
-    reader = spark.readStream.schema(EVENT_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    writer = (reader.json(source_path)
-              .writeStream.foreachBatch(process)
-              .option("checkpointLocation", checkpoint_dir))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+from dht11_data_pipeline_spark.streaming.runner import json_stream, start_batches
 
 
 def start_countmin_stream(spark: SparkSession, source_path: str,
                           state_dir: str, checkpoint_dir: str,
                           key_col: str = "event_id",
-                          d: int = CM_ROWS, w: int = CM_WIDTH,
-                          max_files_per_trigger: int | None = 1,
-                          available_now: bool = True) -> StreamingQuery:
+                          d: int = CM_ROWS, w: int = CM_WIDTH
+                          ) -> StreamingQuery:
     """readStream JSON-lines events → per-batch count-min cell partial
     + per-batch exact key-count partial."""
     _cm_check_grid(d, w)
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         keyed = batch_df.select(
             F.col(key_col).cast("bigint").alias("key"))
         cm_cells(keyed, d, w).write.mode("overwrite").parquet(
@@ -80,8 +64,8 @@ def start_countmin_stream(spark: SparkSession, source_path: str,
          .write.mode("overwrite").parquet(
              f"{state_dir}/cm_truth/b{batch_id}"))
 
-    return _start(spark, source_path, checkpoint_dir, _process,
-                  max_files_per_trigger, available_now)
+    return start_batches(json_stream(spark, EVENT_SCHEMA, source_path),
+                         _process, checkpoint_dir)
 
 
 def current_countmin(spark: SparkSession, state_dir: str,
@@ -102,21 +86,18 @@ def current_countmin(spark: SparkSession, state_dir: str,
 def start_kmv_stream(spark: SparkSession, source_path: str,
                      state_dir: str, checkpoint_dir: str,
                      set_col: str = "event_type",
-                     member_col: str = "user_id", k: int = KMV_K,
-                     max_files_per_trigger: int | None = 1,
-                     available_now: bool = True) -> StreamingQuery:
+                     member_col: str = "user_id", k: int = KMV_K
+                     ) -> StreamingQuery:
     """readStream JSON-lines events → one KMV signature partial
     (set_key, mh: the batch's bottom-k per set) per micro-batch."""
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         kmv_signatures(batch_df, set_col, member_col, k) \
             .write.mode("overwrite").parquet(
                 f"{state_dir}/kmv_sig/b{batch_id}")
 
-    return _start(spark, source_path, checkpoint_dir, _process,
-                  max_files_per_trigger, available_now)
+    return start_batches(json_stream(spark, EVENT_SCHEMA, source_path),
+                         _process, checkpoint_dir)
 
 
 def current_kmv_signatures(spark: SparkSession, state_dir: str,

@@ -19,10 +19,12 @@ def _write_feed(tmp_path, chunks):
     src = str(tmp_path / "feed")
     os.makedirs(src)
     for i, chunk in enumerate(chunks):
-        with open(os.path.join(src, f"b{i}.json"), "w") as f:
+        path = os.path.join(src, f"b{i}.json")
+        with open(path, "w") as f:
             for r in chunk:
                 f.write(json.dumps({"doc_id": r["doc_id"],
                                     "text": r["text"]}) + "\n")
+        os.utime(path, (1_700_000_000 + i, 1_700_000_000 + i))
     return src
 
 

@@ -21,9 +21,11 @@ def test_streamed_pairs_equal_full_run(spark, tmp_path, sf_dir):
     third = len(docs) // 3
     for i, chunk in enumerate([docs[:third], docs[third:2 * third],
                                docs[2 * third:]]):
-        with open(os.path.join(src, f"b{i}.json"), "w") as f:
+        path = os.path.join(src, f"b{i}.json")
+        with open(path, "w") as f:
             for r in chunk:
                 f.write(json.dumps({"doc_id": r["doc_id"], "text": r["text"]}) + "\n")
+        os.utime(path, (1_700_000_000 + i, 1_700_000_000 + i))
 
     pairs_dir = str(tmp_path / "pairs")
     q = start_minhash_dedup_stream(
@@ -40,6 +42,38 @@ def test_streamed_pairs_equal_full_run(spark, tmp_path, sf_dir):
     # no pair reported twice across batches
     assert streamed.groupBy("doc_a", "doc_b").count().filter("count > 1").count() == 0
 
+
+
+def test_minhash_stream_replay_is_idempotent(spark, tmp_path, sf_dir):
+    """Re-running a batch id must reproduce its original pairs: the
+    batch reads the doc and signature stores without its own partition,
+    so a redelivered document does not pair with its own copy."""
+    docs = (spark.read.parquet(f"{sf_dir}/documents.parquet")
+            .select("doc_id", "text").orderBy("doc_id").collect())
+    src = str(tmp_path / "feed")
+    os.makedirs(src)
+    with open(os.path.join(src, "b0.json"), "w") as f:
+        for r in docs:
+            f.write(json.dumps({"doc_id": r["doc_id"], "text": r["text"]}) + "\n")
+    state_dir = str(tmp_path / "state")
+    pairs_dir = str(tmp_path / "pairs")
+    q = start_minhash_dedup_stream(
+        spark, src, state_dir=state_dir, pairs_dir=pairs_dir,
+        checkpoint_dir=str(tmp_path / "ckpt"))
+    q.awaitTermination(300)
+    first = sorted(tuple(r) for r in
+                   spark.read.parquet(pairs_dir).drop("batch").collect())
+    assert first
+
+    # simulate redelivery of batch 0: fresh checkpoint, same source,
+    # same state/pairs dirs
+    q2 = start_minhash_dedup_stream(
+        spark, src, state_dir=state_dir, pairs_dir=pairs_dir,
+        checkpoint_dir=str(tmp_path / "ckpt2"))
+    q2.awaitTermination(300)
+    second = sorted(tuple(r) for r in
+                    spark.read.parquet(pairs_dir).drop("batch").collect())
+    assert first == second
 
 def test_bloom_stream_matches_batch_operator(spark, tmp_path, sf_dir):
     """The streaming bloom-dedup state path (per-batch OR-merged word
@@ -67,10 +101,12 @@ def test_bloom_stream_matches_batch_operator(spark, tmp_path, sf_dir):
     src = str(tmp_path / "feed")
     os.makedirs(src)
     for i, chunk in enumerate(chunks):
-        with open(os.path.join(src, f"b{i}.json"), "w") as f:
+        path = os.path.join(src, f"b{i}.json")
+        with open(path, "w") as f:
             for r in chunk:
                 f.write(json.dumps({"doc_id": r["doc_id"],
                                     "text": r["text"]}) + "\n")
+        os.utime(path, (1_700_000_000 + i, 1_700_000_000 + i))
 
     verdicts_dir = str(tmp_path / "verdicts")
     q = start_bloom_dedup_stream(
@@ -137,10 +173,12 @@ def test_streamed_clusters_equal_one_shot(spark, tmp_path, sf_dir):
     os.makedirs(src)
     half = len(docs) // 2
     for i, chunk in enumerate([docs[:half], docs[half:]]):
-        with open(os.path.join(src, f"b{i}.json"), "w") as f:
+        path = os.path.join(src, f"b{i}.json")
+        with open(path, "w") as f:
             for r in chunk:
                 f.write(json.dumps({"doc_id": r["doc_id"],
                                     "text": r["text"]}) + "\n")
+        os.utime(path, (1_700_000_000 + i, 1_700_000_000 + i))
 
     labels_dir = str(tmp_path / "labels")
     q = start_cluster_stream(
@@ -173,10 +211,12 @@ def test_phash_stream_matches_batch_operator(spark, tmp_path, sf_dir):
     third = len(docs) // 3
     for i, chunk in enumerate([docs[:third], docs[third:2 * third],
                                docs[2 * third:]]):
-        with open(os.path.join(src, f"b{i}.json"), "w") as f:
+        path = os.path.join(src, f"b{i}.json")
+        with open(path, "w") as f:
             for r in chunk:
                 f.write(json.dumps({"doc_id": r["doc_id"],
                                     "text": r["text"]}) + "\n")
+        os.utime(path, (1_700_000_000 + i, 1_700_000_000 + i))
 
     pairs_dir = str(tmp_path / "pairs")
     verdicts_dir = str(tmp_path / "verdicts")

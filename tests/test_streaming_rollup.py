@@ -89,6 +89,24 @@ def test_post_compaction_batches_coexist(spark, sf_dir, tmp_path):
     assert _rows(SR.current_rollup(spark, state)) == _rows(_expected(spark, sf_dir))
 
 
+def test_empty_batch_writes_no_partial(spark, tmp_path):
+    """An empty feed file is a micro-batch with no rows: the runner
+    skips it, so only the one-row file's batch leaves a partial."""
+    src, state, ckpt = (str(tmp_path / d) for d in ("src", "state", "ckpt"))
+    os.makedirs(src)
+    row = {"event_id": 1, "ts": "2024-01-01 10:00:00", "user_id": 7,
+           "event_type": "click", "value": 1.5}
+    for i, lines in enumerate([[], [row]]):
+        path = os.path.join(src, f"f{i}.json")
+        with open(path, "w") as f:
+            for r in lines:
+                f.write(json.dumps(r) + "\n")
+        os.utime(path, (1_700_000_000 + i, 1_700_000_000 + i))
+    q = SR.start_rollup_stream(spark, src, state, ckpt)
+    q.awaitTermination(120)
+    assert sorted(os.listdir(os.path.join(state, "partials"))) == ["b1"]
+    assert SR.current_rollup(spark, state).count() == 1
+
 def test_streamed_affinity_equals_batch(spark, sf_dir, tmp_path):
     """Item-item affinity over the continuously-maintained count
     matrix must equal the one-shot batch affinity over all events —
